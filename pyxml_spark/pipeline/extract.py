@@ -1,8 +1,8 @@
 """Arrow-batched main-content extraction over a transcripts DataFrame.
 
-The Spark operator required by the north_star: "batched Arrow/pandas UDFs
-that tokenize and tree-build whole columns of turn payloads per partition (no
-per-row Python)". One ``mapInPandas`` stage; each Arrow batch crosses the
+The Spark operator required by the north_star: "batched Arrow UDFs that
+tokenize and tree-build whole columns of turn payloads per partition (no
+per-row Python)". One ``mapInArrow`` stage; each Arrow batch crosses the
 JVM/Python boundary once and the engine parses each payload in-process.
 
 Scale design (SURVEY.md §2-F / §4):
@@ -17,23 +17,16 @@ Scale design (SURVEY.md §2-F / §4):
 """
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Optional
+import os
+import sys
+import zipimport
+from typing import Optional
 
-import pandas as pd
-
-from ..engine import parse_document  # noqa: F401 (DOM path for callers)
-from ..engine.compose import ComposeError  # noqa: F401 (re-export for callers)
 from .gather import gather_document
-from .heuristics import (ExtractConfig, extract_main,  # noqa: F401
-                         score_fragments, select_main)
+from .heuristics import ExtractConfig, score_fragments, select_main
 from .schema import EXTRACTION_SCHEMA
 
-__all__ = ['extract_payload', 'extract_batches', 'extract_arrow_batches',
-           'extract_turns',
-           'FAST_PATH_MARKUP']
-
-#: payloads containing neither < nor > skip the parser entirely
-FAST_PATH_MARKUP = ('<', '>')
+__all__ = ['extract_payload', 'extract_arrow_batches', 'extract_turns']
 
 
 def _extract_row(payload: Optional[str], config: ExtractConfig) -> tuple:
@@ -76,26 +69,40 @@ def extract_payload(payload: Optional[str],
                 n_text_chars=n_text_chars)
 
 
-def extract_batches(batches: Iterable[pd.DataFrame],
-                    config: ExtractConfig = ExtractConfig()
-                    ) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: one call per Arrow batch, plain python loop per
-    document inside the batch"""
-    for pdf in batches:
-        conv = pdf['conv_id']
-        turn = pdf['turn_idx']
-        rows = [extract_payload(t, config) for t in pdf['text']]
-        yield pd.DataFrame({
-            'conv_id': conv.values,
-            'turn_idx': turn.values,
-            'main_text': [r['main_text'] for r in rows],
-            'spans': [r['spans'] for r in rows],
-            'parse_error': [r['parse_error'] for r in rows],
-            'n_nodes': [r['n_nodes'] for r in rows],
-            'n_text_chars': [r['n_text_chars'] for r in rows],
-            'n_raw_chars': [len(t) if t is not None else 0
-                            for t in pdf['text']],
-        })
+def _stat_keyed_zip_invalidation() -> None:
+    """re-read a zip archive on ``invalidate_caches()`` only if it changed.
+
+    PySpark's worker invalidates import caches at the start of every task;
+    before CPython 3.13 each cached zipimporter then re-reads its archive's
+    whole directory (16 of them over pyspark.zip, py4j and the spark-core
+    jar: ~0.26 s of CPU a task). CPython 3.13 reads lazily (``_get_files``)
+    and is left alone. Here an archive is re-read only when its (mtime_ns,
+    size, inode) moved since its last read; installing reads each archive
+    once, so no directory older than the hook is trusted.
+    """
+    cls = zipimport.zipimporter
+    reread, read_at = cls.invalidate_caches, {}
+    if hasattr(cls, '_get_files') or hasattr(reread, '__wrapped__'):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is None or files is None or read_at.get(self.archive) != key:
+            reread(self)
+            read_at[self.archive] = key
+        else:
+            self._files = files
+
+    invalidate_caches.__wrapped__ = reread
+    cls.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            finder.invalidate_caches()
 
 
 def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
@@ -107,6 +114,7 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
     """
     import pyarrow as pa
 
+    _stat_keyed_zip_invalidation()
     for batch in batches:
         cols = batch.schema.names
         conv = batch.column(cols.index('conv_id'))
@@ -157,26 +165,18 @@ def extract_turns(df,
                   config: ExtractConfig = ExtractConfig(),
                   partitions: Optional[int] = None,
                   salt: int = 16,
-                  sort_output: bool = True,
-                  use_arrow: bool = True):
+                  sort_output: bool = True):
     """transcripts DataFrame -> extraction DataFrame.
 
     ``partitions``/``salt`` control the explicit salted repartition; with
     ``partitions=None`` the session's shuffle parallelism is used.
-    ``use_arrow`` selects the pyarrow kernel (default; the pandas kernel is
-    kept as a fallback/reference).
     """
     from .skew import salted_repartition
 
     cols = df.select('conv_id', 'turn_idx', 'text')
     spread = salted_repartition(cols, partitions, salt=salt)
-    if use_arrow:
-        out = spread.mapInArrow(
-            lambda it: extract_arrow_batches(it, config),
-            schema=EXTRACTION_SCHEMA)
-    else:
-        out = spread.mapInPandas(
-            lambda it: extract_batches(it, config), schema=EXTRACTION_SCHEMA)
+    out = spread.mapInArrow(lambda it: extract_arrow_batches(it, config),
+                            schema=EXTRACTION_SCHEMA)
     if sort_output:
         out = out.sortWithinPartitions('conv_id', 'turn_idx')
     return out

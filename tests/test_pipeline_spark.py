@@ -91,6 +91,39 @@ def test_spans_round_trip_through_arrow(spark, turns_pdf):
     assert span.end > span.start >= 0
 
 
+def test_worker_task_setup_rereads_no_zip(spark):
+    """once the kernel has run in a worker, the import-cache invalidation
+    PySpark makes at the start of each task re-reads no unchanged zip
+    archive (pyspark.zip, py4j, the spark-core jar)"""
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+        from pyxml_spark.pipeline.extract import extract_arrow_batches
+        for _ in batches:
+            pass
+        list(extract_arrow_batches(iter([])))
+        reads = []
+        real_read = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real_read(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real_read
+        archives = sorted({f.archive for f in sys.path_importer_cache.values()
+                           if isinstance(f, zipimport.zipimporter)})
+        yield pa.RecordBatch.from_pydict(
+            {'archives': [archives], 'reads': [len(reads)]})
+
+    row, = (spark.range(1, numPartitions=1)
+            .mapInArrow(probe, 'archives array<string>, reads long')
+            .collect())
+    assert any(a.endswith('pyspark.zip') for a in row.archives), row.archives
+    assert row.reads == 0, row.archives
+
+
 def test_resume_exactly_once(spark, turns_pdf, tmp_path):
     from pyxml_spark.pipeline import run_with_resume, TRANSCRIPTS_SCHEMA
     inp = os.path.join(tmp_path, 'in.parquet')
