@@ -5,7 +5,7 @@ operator names (SURVEY.md §2 + training-data ops) to callables; each has a
 DuckDB-runnable ``oracle_sql()`` twin computing the same result relationally.
 
 Engine-backed queries run the *real* parse/xpath/escape/serialize engine in
-Arrow-batched pandas UDFs; their oracles are SQL-constructible because the
+Arrow-batched UDFs; their oracles are SQL-constructible because the
 ``documents`` corpus is markup-free, so the expected engine output has a
 closed form (identity / wrapped / counted). Aggregates avoid floats where
 possible (decimal-exact sums cast to double, integer math for ratios) so
@@ -110,24 +110,41 @@ def _run_extraction(df: DataFrame) -> DataFrame:
                       'parse_error', 'spans')
 
 
-def _xpath_count_batches(batches):
-    from pyxml_spark.engine.html import fromstring
+def _dom_query(src: DataFrame, schema: StructType,
+               make_fn: Callable[[], Callable]) -> DataFrame:
+    """one mapInArrow kernel for the DOM contract queries: each ``payload``
+    of ``src`` (doc_id, payload) is parsed with ``engine.html.fromstring``
+    and ``fn(root)`` returns that row's values after ``doc_id``. ``fn`` is
+    built by ``make_fn()`` once per task, so xpath programs compile once."""
+    def kernel(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyxml_spark.engine.html import fromstring
+        arrow_schema = to_arrow_schema(schema)
+        types = arrow_schema.types[1:]
+        fn = make_fn()
+        for batch in batches:
+            cols = [[] for _ in types]
+            for payload in batch.column('payload').to_pylist():
+                for col, value in zip(cols, fn(fromstring(payload.encode()))):
+                    col.append(value)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column('doc_id')]
+                + [pa.array(col, typ) for col, typ in zip(cols, types)],
+                schema=arrow_schema)
+
+    return src.mapInArrow(kernel, schema)
+
+
+def _xpath_count_fn():
     from pyxml_spark.engine.xq import compile_path, run_steps
-    prog = compile_path('//p')  # compiled once per worker, reused per doc
-    for pdf in batches:
-        counts = []
-        for payload in pdf['payload']:
-            root = fromstring(payload.encode())
-            counts.append(len(run_steps(prog, (root,))))
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, 'n_p': counts})
+    prog = compile_path('//p')
+    return lambda root: (len(run_steps(prog, (root,))),)
 
 
-def _serialize_batches(batches):
-    from pyxml_spark.engine.html import fromstring, tostring
-    for pdf in batches:
-        out = [tostring(fromstring(p.encode())).decode()
-               for p in pdf['payload']]
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, 'serialized': out})
+def _serialize_fn():
+    from pyxml_spark.engine.html import tostring
+    return lambda root: (tostring(root).decode(),)
 
 
 # ------------------------------------------------------------------- queries
@@ -196,9 +213,9 @@ def q_xpath_count(spark, sf_dir) -> DataFrame:
         F.repeat(F.lit('<p>x</p>'), (F.col('doc_id') % 5 + 1).cast('int')),
         F.lit('</div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    out = src.mapInPandas(_xpath_count_batches, schema=StructType([
-        StructField('doc_id', LongType()), StructField('n_p', LongType())]))
-    return out.select('doc_id', F.col('n_p').cast('long').alias('n_p'))
+    return _dom_query(src, StructType([
+        StructField('doc_id', LongType()), StructField('n_p', LongType())]),
+        _xpath_count_fn)
 
 
 def q_node_table_stats(spark, sf_dir) -> DataFrame:
@@ -223,9 +240,9 @@ def q_serialize_roundtrip(spark, sf_dir) -> DataFrame:
     """parse -> tostring(html); expected bytes have a closed form"""
     docs = _table(spark, sf_dir, 'documents')
     src = docs.select('doc_id', _wrap_html(F.col('text')).alias('payload'))
-    return src.mapInPandas(_serialize_batches, schema=StructType([
+    return _dom_query(src, StructType([
         StructField('doc_id', LongType()),
-        StructField('serialized', StringType())]))
+        StructField('serialized', StringType())]), _serialize_fn)
 
 
 def q_escape_attrib(spark, sf_dir) -> DataFrame:
@@ -777,32 +794,24 @@ _XFN_PATHS = ('//p[starts-with(@class, "k")]/@class',
               '//p[2]/@class')
 
 
-def _xpath_fn_batches(batches):
-    from pyxml_spark.engine.html import fromstring
+def _xpath_functions_fn():
     from pyxml_spark.engine.xq import compile_path, run_steps
-    progs = [compile_path(p) for p in _XFN_PATHS]  # compiled once per worker
-    for pdf in batches:
-        cols = {name: [] for name in
-                ('cls_k', 'z_upper', 'z_first', 'n_b', 'second_cls')}
-        for payload in pdf['payload']:
-            root = fromstring(payload.encode())
-            for name, prog in zip(cols, progs):
-                hits = run_steps(prog, (root,))
-                cols[name].append(str(hits[0]) if hits else None)
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, **cols})
+    progs = [compile_path(p) for p in _XFN_PATHS]
+
+    def fn(root):
+        hits = [run_steps(prog, (root,)) for prog in progs]
+        return [str(h[0]) if h else None for h in hits]
+    return fn
 
 
-def _attr_batches(batches):
-    from pyxml_spark.engine.html import fromstring
+def _attr_fn():
     from pyxml_spark.engine.xq import compile_path, run_steps
     prog = compile_path('//p[@class]/@class')
-    for pdf in batches:
-        vals = []
-        for payload in pdf['payload']:
-            root = fromstring(payload.encode())
-            hits = run_steps(prog, (root,))
-            vals.append(hits[0] if hits else None)
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, 'cls': vals})
+
+    def fn(root):
+        hits = run_steps(prog, (root,))
+        return (hits[0] if hits else None,)
+    return fn
 
 
 def q_xpath_attr_extract(spark, sf_dir) -> DataFrame:
@@ -814,7 +823,7 @@ def q_xpath_attr_extract(spark, sf_dir) -> DataFrame:
         (F.col('doc_id') % 7).cast('string'),
         F.lit('">styled</p></div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    return src.mapInPandas(_attr_batches, schema=_ATTR_SCHEMA)
+    return _dom_query(src, _ATTR_SCHEMA, _attr_fn)
 
 
 _HEX = '0123456789abcdef'
@@ -833,7 +842,7 @@ def q_xpath_functions(spark, sf_dir) -> DataFrame:
         F.repeat(F.lit('<b>x</b>'), (F.col('doc_id') % 4 + 2).cast('int')),
         F.lit('</div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    return src.mapInPandas(_xpath_fn_batches, schema=_XFN_SCHEMA)
+    return _dom_query(src, _XFN_SCHEMA, _xpath_functions_fn)
 
 
 def q_simhash16(spark, sf_dir) -> DataFrame:

@@ -139,19 +139,7 @@ class GatherComposer:
 
     def start(self, tag, attrs, _skip=SKIP_TAGS, _boiler=BOILER_TAGS,
               _block=BLOCK_TAGS, _hint=_hint_boiler, _str=str):
-        # inline of _settle's empty-buffer shape (the common case between
-        # adjacent structural events); full settle otherwise
-        last = self.last
-        if last is not None and not self.frags:
-            slot = _TAIL if self.in_tail else _TEXT
-            if not last[slot]:
-                last[slot] = ''
-            elif not self.fix_broken:
-                raise ComposeError(
-                    'Element tail already assigned' if slot == _TAIL
-                    else 'Element text already assigned')
-        else:
-            self._settle()
+        self._settle()
         if not self.open and self.root_seen:
             if not self.fix_broken:
                 raise ComposeError('more than one tree present')
@@ -206,17 +194,7 @@ class GatherComposer:
                 if self.fix_broken:
                     return
                 raise ComposeError(f'Unexpected End. Tree Is Empty: {tag}')
-            last = self.last
-            if last is not None and not self.frags:
-                slot = _TAIL if self.in_tail else _TEXT
-                if not last[slot]:
-                    last[slot] = ''
-                elif not self.fix_broken:
-                    raise ComposeError(
-                        'Element tail already assigned' if slot == _TAIL
-                        else 'Element text already assigned')
-            else:
-                self._settle()
+            self._settle()
             self.last = self.open.pop()
             if self.last[_TAG] != tag:
                 if not self.fix_broken:

@@ -15,10 +15,10 @@ children) so it runs identically over our Element and the reference's Element
 from __future__ import annotations
 
 import re
-from typing import Any, List, NamedTuple, Optional, Tuple
+from typing import List, NamedTuple, Tuple
 
-__all__ = ['ExtractConfig', 'Extraction', 'score_blocks', 'score_fragments',
-           'select_main', 'extract_main']
+__all__ = ['ExtractConfig', 'Extraction', 'score_fragments', 'select_main',
+           'extract_main']
 
 Span = Tuple[int, int]
 
@@ -82,14 +82,6 @@ def _hint_boiler(attrib) -> bool:
     return bool(_BOILER_HINT_RX.search(hint.lower()))
 
 
-def _is_boiler_elem(tag: Any, attrib) -> bool:
-    if tag in BOILER_TAGS:
-        return True
-    if not attrib:
-        return False
-    return _hint_boiler(attrib)
-
-
 def _gather(root) -> Tuple[list, List[bool], int]:
     """document-order fragment collection (text before children, each child's
     tail after that child's subtree), tracking nearest block / link / skip /
@@ -144,13 +136,6 @@ def _gather(root) -> Tuple[list, List[bool], int]:
     return fragments, block_boiler, n_nodes
 
 
-def score_blocks(root, config: ExtractConfig = ExtractConfig()):
-    """aggregate fragments into scored blocks (document order); returns
-    (blocks, n_nodes) — the node count falls out of the same walk"""
-    fragments, block_boiler, n_nodes = _gather(root)
-    return score_fragments(fragments, block_boiler), n_nodes
-
-
 def score_fragments(fragments, block_boiler):
     """fragments (from _gather or the streaming GatherComposer) -> scored
     blocks in document order"""
@@ -183,8 +168,9 @@ def score_fragments(fragments, block_boiler):
 def extract_main(root, config: ExtractConfig = ExtractConfig(),
                  count_nodes: bool = True) -> Extraction:
     """main-content text + spans from a parsed DOM"""
-    blocks, n_nodes = score_blocks(root, config)
-    return select_main(blocks, n_nodes if count_nodes else 0, config)
+    fragments, block_boiler, n_nodes = _gather(root)
+    return select_main(score_fragments(fragments, block_boiler),
+                       n_nodes if count_nodes else 0, config)
 
 
 def select_main(blocks, n_nodes,

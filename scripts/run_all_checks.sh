@@ -4,7 +4,7 @@ set -e
 cd "$(dirname "$0")/.."
 
 echo '== 1. test suite (parity + spark e2e + fuzz) =='
-python3 -m pytest tests/ -q
+python3 -m pytest tests/ -q -rs
 
 echo '== 2. driver contract vs DuckDB oracles (sf0.01) =='
 python3 scripts/check_contract.py /root/testdata/sf0.01

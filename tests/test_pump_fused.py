@@ -43,14 +43,18 @@ def shape_with_spans(root):
     return out
 
 
-def run_both(payload: bytes, fix_broken: bool, empty, track_spans: bool):
+def run_both(payload: bytes, fix_broken: bool, empty, track_spans: bool,
+             make_target=TreeComposer):
+    """(unfused, fused) outcomes; each side gets a fresh
+    ``make_target(fix_broken=...)``"""
     def unfused():
-        pump = EventPump(payload, fix_broken=fix_broken, empty=empty,
+        pump = EventPump(payload, target=make_target(fix_broken=fix_broken),
+                         fix_broken=fix_broken, empty=empty,
                          track_spans=track_spans)
         return pump.run()
 
     def fused():
-        return pump_document(payload, TreeComposer(fix_broken=fix_broken),
+        return pump_document(payload, make_target(fix_broken=fix_broken),
                              fix_broken=fix_broken, empty=empty,
                              track_spans=track_spans)
 
@@ -73,6 +77,37 @@ def test_corpus_fused_equals_unfused(fix_broken, empty):
         assert a == b, payload
         a, b = run_both(payload, fix_broken, empty, track_spans=True)
         assert a == b, payload
+
+
+#: declarations are inserted only below a root; CORPUS has none there
+DECL_PAYLOADS = [b'<a><!DOCTYPE x>t<!--c-->u<?pi v?>w</a>',
+                 b'<a>x</a><!DOCTYPE y><b/>',
+                 b'<r><!ENTITY e "v"><p>z</p></r>']
+
+
+def inserting_composer(fix_broken: bool) -> TreeComposer:
+    return TreeComposer(insert_comments=True, insert_declares=True,
+                        insert_pis=True, fix_broken=fix_broken)
+
+
+@pytest.mark.parametrize('fix_broken', [False, True])
+@pytest.mark.parametrize('empty', [None, frozenset(HTML_VOID)])
+def test_corpus_fused_equals_unfused_inserting_composer(fix_broken, empty):
+    """comment / declaration / PI events reach the target the same way on
+    both paths: a composer that inserts them as nodes sees one tree"""
+    inserted = set()
+    for payload in CORPUS + DECL_PAYLOADS:
+        if isinstance(payload, str):
+            payload = payload.encode()
+        a, b = run_both(payload, fix_broken, empty, track_spans=True,
+                        make_target=inserting_composer)
+        assert a == b, payload
+        if a[0] == 'ok':
+            inserted.update(tag for tag, *_ in a[1]
+                            if tag in ('Comment', 'Declaration',
+                                       'ProcessingInstruction'))
+    # the corpus must actually exercise all three insert paths
+    assert inserted == {'Comment', 'Declaration', 'ProcessingInstruction'}
 
 
 @settings(max_examples=500, deadline=None,
