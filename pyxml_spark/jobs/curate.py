@@ -95,7 +95,7 @@ def main(argv=None) -> int:
 
     from pyspark.sql import functions as F
 
-    from pyxml_spark.jobs.extract import build_session
+    from pyxml_spark.jobs.extract import build_session, stage_manifests
     from pyxml_spark.pipeline.curate import (REP_MAX_X10K, decontaminate,
                                              score_documents)
     from pyxml_spark.pipeline.dedup import (PAIR_WINDOW, candidate_pairs,
@@ -135,19 +135,7 @@ def main(argv=None) -> int:
                 p.update(mixture={k: weights[k] for k in sorted(weights)})
             return p
 
-        def committed(path: str, stage: str) -> bool:
-            if not (args.resume
-                    and os.path.exists(os.path.join(path, '_SUCCESS'))):
-                return False
-            try:
-                with open(path + '.manifest.json') as f:
-                    return json.load(f) == stage_params(stage)
-            except (OSError, ValueError):
-                return False
-
-        def mark(path: str, stage: str) -> None:
-            with open(path + '.manifest.json', 'w') as f:
-                json.dump(stage_params(stage), f, sort_keys=True)
+        committed, mark = stage_manifests(args.resume, stage_params)
 
         stages_run = []
         docs = spark.read.parquet(args.input).select(

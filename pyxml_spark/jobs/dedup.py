@@ -60,7 +60,7 @@ def main(argv=None) -> int:
                          'not survive executor loss')
     args = ap.parse_args(argv)
 
-    from pyxml_spark.jobs.extract import build_session
+    from pyxml_spark.jobs.extract import build_session, stage_manifests
     from pyxml_spark.pipeline.dedup import (HOT_BUCKET_THRESHOLD, MH_PRIME,
                                             N_BANDS, N_PERMS, N_SUBBUCKETS,
                                             PAIR_WINDOW, candidate_pairs,
@@ -91,22 +91,7 @@ def main(argv=None) -> int:
                          dup_threshold_x10k=args.dup_threshold_x10k)
             return p
 
-        def manifest_path(path: str) -> str:
-            return path + '.manifest.json'
-
-        def committed(path: str, stage: str) -> bool:
-            if not (args.resume
-                    and os.path.exists(os.path.join(path, '_SUCCESS'))):
-                return False
-            try:
-                with open(manifest_path(path)) as f:
-                    return json.load(f) == stage_params(stage)
-            except (OSError, ValueError):
-                return False
-
-        def mark(path: str, stage: str) -> None:
-            with open(manifest_path(path), 'w') as f:
-                json.dump(stage_params(stage), f, sort_keys=True)
+        committed, mark = stage_manifests(args.resume, stage_params)
 
         stages_run = []
 

@@ -44,6 +44,29 @@ def build_session(cpus: int, app: str = 'pyxml-spark-extract',
             .getOrCreate())
 
 
+def stage_manifests(resume: bool, stage_params):
+    """``(committed, mark)`` for the stage outputs of a multi-stage job
+    (dedup.py, curate.py). Under ``resume``, the output at ``path`` is
+    reused only if ``path/_SUCCESS`` exists and ``<path>.manifest.json``
+    equals ``stage_params(stage)``; a missing or unreadable manifest (e.g.
+    a crash between the write and ``mark``) runs the stage again."""
+
+    def committed(path: str, stage: str) -> bool:
+        if not (resume and os.path.exists(os.path.join(path, '_SUCCESS'))):
+            return False
+        try:
+            with open(path + '.manifest.json') as f:
+                return json.load(f) == stage_params(stage)
+        except (OSError, ValueError):
+            return False
+
+    def mark(path: str, stage: str) -> None:
+        with open(path + '.manifest.json', 'w') as f:
+            json.dump(stage_params(stage), f, sort_keys=True)
+
+    return committed, mark
+
+
 def main(argv=None) -> int:
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))

@@ -36,7 +36,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
-    from bench import build_session
+    from pyxml_spark.jobs.extract import build_session
     spark = build_session(args.cpus)
     spark.sparkContext.setLogLevel('ERROR')
     spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')

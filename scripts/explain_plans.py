@@ -1,11 +1,14 @@
-"""Capture physical plans for the pipeline's key operators into PLANS.md and
-assert the scale-critical properties:
+"""Capture physical plans for the pipeline's key operators and assert the
+scale-critical properties:
 
 * parquet scans push filters (PushedFilters) and prune columns (ReadSchema);
 * the resume anti-join broadcasts the small side;
 * relational glue runs in WholeStageCodegen;
 * the extraction stage is a single Exchange (the salted repartition) feeding
   one ArrowEvalPython/MapInArrow stage — no extra shuffles.
+
+The list of checked properties goes to PLANS.md; the full plan dump goes to
+pyxml_spark_plans.md under the temp directory, whose path is printed.
 
 Usage: python3 scripts/explain_plans.py [sf_dir]
 """
@@ -14,6 +17,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,7 +36,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
-    from bench import build_session
+    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline import extract_turns, with_bucket
 
     spark = build_session(8)
@@ -112,7 +116,6 @@ def main() -> int:
     # so the post-write stats read must partition-prune to this run's
     # buckets (no full-output rescan; input lineage rides the same scan via
     # n_raw_chars — the input itself is never re-read for metrics)
-    import tempfile
     with tempfile.TemporaryDirectory() as td:
         bucketed = with_bucket(
             turns.select('conv_id', 'turn_idx', 'text'), 8)
@@ -470,16 +473,21 @@ def main() -> int:
                    and 'CartesianProduct' not in di_plan))
 
     failed = [c for c in checks if not c[2]]
-    out = os.path.join(REPO, 'PLANS.md')
-    with open(out, 'w') as f:
-        f.write('# PLANS — physical plan evidence (explain formatted)\n\n')
-        f.write('Checked properties:\n\n')
-        for name, needle, ok in checks:
-            f.write(f"- {'PASS' if ok else 'FAIL'} `{name}`: {needle}\n")
-        f.write('\n')
+    dump = os.path.join(tempfile.gettempdir(), 'pyxml_spark_plans.md')
+    with open(dump, 'w') as f:
+        f.write('# Physical plans (explain formatted)\n\n')
         for name, text in sections:
             f.write(f'## {name}\n\n```\n{text}\n```\n\n')
+    out = os.path.join(REPO, 'PLANS.md')
+    with open(out, 'w') as f:
+        f.write('# PLANS — physical plan properties\n\n'
+                'Checked by `python3 scripts/explain_plans.py`, which writes '
+                'the full\nplan dump to `pyxml_spark_plans.md` under the '
+                'temp directory.\n\n')
+        for name, needle, ok in checks:
+            f.write(f"- {'PASS' if ok else 'FAIL'} `{name}`: {needle}\n")
     print(f'wrote {out}; {len(checks) - len(failed)}/{len(checks)} checks pass')
+    print(f'full plans: {dump}')
     for name, needle, _ in failed:
         print(f'FAIL {name}: {needle}')
     spark.stop()

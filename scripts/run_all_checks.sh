@@ -3,8 +3,9 @@
 set -e
 cd "$(dirname "$0")/.."
 
-echo '== 1. test suite (parity + spark e2e + fuzz) =='
+echo '== 1. test suite (parity + spark e2e + fuzz) + benchmark self-tests =='
 python3 -m pytest tests/ -q -rs
+python3 -m pytest perfbench -q
 
 echo '== 2. driver contract vs DuckDB oracles (sf0.01) =='
 python3 scripts/check_contract.py /root/testdata/sf0.01

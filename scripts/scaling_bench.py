@@ -16,45 +16,36 @@ from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing
 import os
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-RUNNER = r'''
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from bench import build_session
-from pyxml_spark.pipeline import extract_turns
-
-cpus = int(sys.argv[1]); path = sys.argv[2]; reps = int(sys.argv[3])
-spark = build_session(cpus)
-spark.sparkContext.setLogLevel('ERROR')
-turns = spark.read.parquet(path)
-n = turns.count()
-extract_turns(turns.limit(20000), partitions=cpus * 2).count()  # warm workers
-best = None
-for _ in range(reps):
-    t0 = time.time()
-    rows = extract_turns(turns, partitions=cpus * 2).count()
-    dt = time.time() - t0
-    best = dt if best is None or dt < best else best
-print(json.dumps({{'cpus': cpus, 'rows': rows, 'seconds': round(best, 3),
-                   'turns_per_sec': round(rows / best, 1)}}))
-spark.stop()
-'''
+sys.path.insert(0, REPO)
 
 
-def run_at(cpus: int, path: str, reps: int) -> dict:
-    code = RUNNER.format(repo=REPO)
-    out = subprocess.run([sys.executable, '-c', code, str(cpus), path,
-                          str(reps)], capture_output=True, text=True,
-                         check=True)
-    line = [l for l in out.stdout.strip().splitlines()
-            if l.startswith('{')][-1]
-    return json.loads(line)
+def _level(cpus: int, path: str) -> dict:
+    """extraction throughput at local[cpus], one timed run"""
+    from bench import extraction_wall
+    from pyxml_spark.jobs.extract import build_session
+    spark = build_session(cpus)
+    spark.sparkContext.setLogLevel('ERROR')
+    try:
+        turns = spark.read.parquet(path)
+        rows = turns.count()
+        best = extraction_wall(turns, cpus, reps=1)
+    finally:
+        spark.stop()
+    return {'cpus': cpus, 'rows': rows, 'seconds': round(best, 3),
+            'turns_per_sec': round(rows / best, 1)}
+
+
+def run_at(cpus: int, path: str) -> dict:
+    """``_level`` in a fresh process, so each level starts its own JVM"""
+    with multiprocessing.get_context('spawn').Pool(1) as pool:
+        return pool.apply(_level, (cpus, path))
 
 
 #: fixed pure-CPU work unit for the hardware-ceiling probe (~1.5-3s/proc)
@@ -83,8 +74,8 @@ def main() -> int:
                                                   'BASELINE.md'))
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from bench import BENCH_TMP, build_session
+    from bench import BENCH_TMP
+    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline import write_transcripts
     path = os.path.join(BENCH_TMP, f'scaling_v2_{args.rows}.parquet')
     if not os.path.exists(os.path.join(path, '_SUCCESS')):
@@ -103,7 +94,7 @@ def main() -> int:
     for _ in range(args.reps):
         for c in (2, 8, 32):
             probe[c] = max(probe[c], probe_at(c))
-            r = run_at(c, path, 1)
+            r = run_at(c, path)
             if c not in results or r['seconds'] < results[c]['seconds']:
                 results[c] = r
     eff_2_8 = (results[8]['turns_per_sec']
@@ -139,10 +130,11 @@ def main() -> int:
     with open(args.out, 'w') as f:
         f.write(f"""# BENCH/BASELINE — measured throughput & scaling evidence
 
-Job: `extract_turns` (salted repartition + mapInArrow batch extraction) over
-a deterministic synthetic transcripts table ({args.rows:,} turns, seed=42,
-~290-char avg payloads, Zipf-skewed conversation lengths), identical input
-at every parallelism level. Protocol: parallelism levels interleaved across
+Job: `extract_turns` (salted repartition + mapInArrow batch extraction +
+local sort, written to the noop sink) over a deterministic synthetic
+transcripts table ({args.rows:,} turns, seed=42, ~290-char avg payloads,
+Zipf-skewed conversation lengths), identical input at every parallelism
+level. Protocol: parallelism levels interleaved across
 {args.reps} repetitions, best run per level kept — this sandbox VM shows
 CPU-steal / burst-throttling (single-thread speed varies ~2x over minutes),
 so interleaving + best-of is required for a fair ratio.
@@ -150,13 +142,6 @@ so interleaving + best-of is required for a fair ratio.
 | parallelism | wall (s) | turns/sec |
 |---|---|---|
 {rows_tbl}
-
-Window variance note: absolute throughput swings with the VM's burst
-throttle (observed 58k-160k turns/sec at local[32] across windows the same
-day; best measured this round: **160,622 turns/sec** on 1M rows in an
-interleaved batch-size x partition sweep, which also confirmed the tuned
-defaults of arrow batch 16384 and partitions = 2*cores). Only within-window
-ratios are meaningful; the table above is one window.
 
 ## Scaling efficiency (N vs 4N, sandbox stand-in for executor counts)
 
@@ -180,52 +165,10 @@ the normalized number is the framework's own scaling behavior.
 * local[8] -> local[32] additionally oversubscribes the socket (32 workers
   + JVM threads on 32 physical cores), so even its hardware ceiling
   understates the penalty; supplementary only.
-* The job tracks the hardware ceiling at {norm_2_8:.0%} on the criterion
-  pair: the pipeline adds essentially no shuffle- or coordination-bound
-  scaling loss — the only exchange is the explicit salted repartition,
-  extraction is embarrassingly parallel per Arrow batch, and the final
-  count is a map-side aggregate.
-
-## Skew evidence
-
-On an adversarial table where one conversation owns 50% of 200k turns,
-salted repartition (salt=16) beats plain conv_id partitioning by **3.2x**
-at local[8] (12.6s -> 3.9s, same window): without salt the hot key pins
-one task while the other cores idle; with salt the per-turn-independent
-extraction spreads the hot conversation across tasks with no re-merge
-cost beyond the local sort.
-
-## Correctness context
-
-Per-turn text equality vs the reference-parser oracle is enforced by
-`tests/test_pipeline_spark.py::test_extraction_equality_gate` (0 mismatches)
-plus the differential suites (token stream / DOM / serialize / xpath /
-escape parity over ~170 corpus payloads, 1,300 hypothesis-fuzzed inputs per
-run, and a random-xpath probe — tests/test_oracle_diff.py,
-tests/test_fuzz_parity.py). One-off soaks this round, all clean: 16k random
-markup payloads x 2 modes vs the reference parser; 6k payloads on an
-encoding/backslash/CDATA-focused alphabet; 25k random xpaths vs the
-reference engine; 10k serialize round-trips (xml+html tostring bytes
-exact); extraction equality vs heuristics-over-reference-DOMs at 50k and
-200k fresh-seed turns (145,802 parse-compared + 19,912 matched-error rows
-at 200k, 0 mismatches). The streaming no-DOM gather path is pinned to the
-DOM path by tests/test_gather.py. Operational: incremental resume with
-max_buckets=7 converges in 6 runs to exactly 5,000/5,000 rows with zero
-duplicate keys; a post-completion run is a no-op. Determinism: the full
-extraction output (text, spans, errors, counts) hashes bit-identically
-between local[4] and local[16] sessions on the same 20k-turn input — the
-per-row invariant behind the N-vs-4N criterion.
-
-## Single-node comparison vs the reference
-
-The reference publishes no numbers (BASELINE.md at repo root); measured on
-identical payload mixes, interleaved A/B in one process after the
-fused-pump work: our engine parses **~3.7x faster** than the reference's
-byte-at-a-time lexer (15.7k vs 4.3k docs/s; ours additionally tracks char
-spans, which the reference cannot do at all). Full extraction (parse +
-streaming heuristics + spans) runs ~11-12.5k docs/s/core under mild
-throttle — ~1.5x the first complete build of this round (4-cycle
-interleaved subprocess A/B, best-of).
+* The job reaches {norm_2_8:.0%} of the hardware ceiling on the criterion
+  pair. Its plan has one Exchange (the salted repartition), one mapInArrow
+  extraction stage and a partition-local sort; each timed run writes every
+  output row to Spark's noop sink, so the sort runs.
 
 Config: arrow maxRecordsPerBatch=16384 capped at 64MB/batch,
 partitions=2*cores, AQE on.
