@@ -321,41 +321,21 @@ def q_token_count(spark, sf_dir) -> DataFrame:
 
 
 def q_quality_score(spark, sf_dir) -> DataFrame:
-    """length/word-shape quality gate with integer-only math"""
+    """length/word-shape quality gate with integer-only math
+    (pipeline/curate.score_documents)"""
+    from pyxml_spark.pipeline.curate import score_documents
     docs = _table(spark, sf_dir, 'documents')
-    trimmed = F.trim(F.col('text'))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    chars_ns = F.length(F.regexp_replace('text', r'\s+', '')).cast('long')
-    d = docs.select('doc_id', n_tokens.alias('n_tokens'),
-                    chars_ns.alias('chars_ns'))
-    is_q = ((F.col('n_tokens') >= 5) & (F.col('n_tokens') <= 500)
-            & (F.col('chars_ns') >= 3 * F.col('n_tokens'))
-            & (F.col('chars_ns') <= 12 * F.col('n_tokens')))
-    return d.select('doc_id', 'n_tokens', 'chars_ns',
-                    is_q.alias('is_quality'))
-
-
-#: high-frequency English character trigrams for the n-gram scorer
-_EN_TRIGRAMS = ('the', 'ing', 'ent', 'ion', 'and')
+    return score_documents(docs).select('doc_id', 'n_tokens', 'chars_ns',
+                                        'is_quality')
 
 
 def q_lang_id(spark, sf_dir) -> DataFrame:
     """language-ID heuristic: stopword hits + character-trigram frequency
-    (occurrence counting via length-difference — exact in both engines)"""
+    (pipeline/curate.score_documents)"""
+    from pyxml_spark.pipeline.curate import score_documents
     docs = _table(spark, sf_dir, 'documents')
-    padded = F.concat(F.lit(' '), F.col('text'), F.lit(' '))
-    hits = sum((F.instr(padded, f' {w} ') > 0).cast('long')
-               for w in ('the', 'and', 'of', 'to', 'in'))
-    tri = sum(((F.length('text')
-                - F.length(F.replace(F.col('text'), F.lit(g)))) / 3)
-              .cast('long') for g in _EN_TRIGRAMS)
-    d = docs.select('doc_id', hits.alias('en_hits'),
-                    tri.alias('tri_hits'))
-    return d.select('doc_id', 'en_hits', 'tri_hits',
-                    F.when((F.col('en_hits') >= 2)
-                           | (F.col('tri_hits') >= 3), F.lit('en'))
-                    .otherwise(F.lit('unk')).alias('predicted'))
+    return score_documents(docs).select(
+        'doc_id', 'en_hits', 'tri_hits', F.col('lang').alias('predicted'))
 
 
 def q_source_boilerplate_strip(spark, sf_dir) -> DataFrame:
@@ -417,42 +397,10 @@ def q_pii_scrub(spark, sf_dir) -> DataFrame:
 
 def q_gopher_repetition(spark, sf_dir) -> DataFrame:
     """Gopher-style repetition signal: fraction of the document's word
-    bigrams taken by the most frequent bigram (integer x10000).
-
-    Linear plan: the bigram array is staged in a Project, explode_outer'd
-    (so zero-bigram docs keep their row), counted per (doc_id, bigram),
-    then reduced per doc — two hash aggregates with map-side partial
-    combine. The previous row-local form (array_distinct + a nested filter
-    per distinct bigram) rescanned the whole array once per distinct
-    bigram: O(D*N) inside a single row's expression, ~1e10 comparisons on
-    a 100k-token document. tests/test_textops.py pins the flat cost on a
-    50k-token doc and asserts array_distinct is gone from the plan."""
-    docs = _table(spark, sf_dir, 'documents')
-    # stage the split token array in its own Project: element_at inside the
-    # transform lambda would otherwise re-evaluate the split per element
-    # (no common-subexpression elimination across higher-order-function
-    # boundaries) — quadratic bigram *construction* on long documents
-    ws = docs.select('doc_id',
-                     F.split(F.trim('text'), r'\s+').alias('ws'))
-    n = F.size('ws')
-    bg = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat(F.element_at('ws', i), F.lit(' '),
-                           F.element_at('ws', i + 1)))) \
-        .otherwise(F.array().cast('array<string>'))
-    staged = ws.select('doc_id', bg.alias('bg'))
-    exploded = staged.select('doc_id', F.explode_outer('bg').alias('bigram'))
-    cnt = F.when(F.col('bigram').isNull(), F.lit(0)).otherwise(F.col('cnt'))
-    per_doc = (exploded.groupBy('doc_id', 'bigram')
-               .agg(F.count('*').alias('cnt'))
-               .groupBy('doc_id')
-               .agg(F.sum(cnt).cast('long').alias('n_bigrams'),
-                    F.max(cnt).cast('long').alias('top_count')))
-    rep = F.when(F.col('n_bigrams') <= 0, F.lit(0)).otherwise(
-        F.floor(F.col('top_count') * 10000 / F.col('n_bigrams'))) \
-        .cast('long')
-    return per_doc.select('doc_id', 'n_bigrams', 'top_count',
-                          rep.alias('rep_x10k'))
+    bigrams taken by the most frequent bigram, x10000
+    (pipeline/curate.repetition_x10k, linear explode + aggregate plan)"""
+    from pyxml_spark.pipeline.curate import repetition_x10k
+    return repetition_x10k(_table(spark, sf_dir, 'documents'))
 
 
 def q_gopher_ngram_fractions(spark, sf_dir) -> DataFrame:
@@ -734,23 +682,14 @@ def q_ngram_jaccard_pairs(spark, sf_dir) -> DataFrame:
 
 
 def q_simsearch_topk(spark, sf_dir) -> DataFrame:
-    """brute-force cosine top-10 against the vec_id=0 query embedding;
-    double accumulation matches DuckDB's double inner product"""
-    emb = _table(spark, sf_dir, 'embeddings')
-    vec = emb.select('vec_id', F.transform('embedding',
-                                           lambda x: x.cast('double'))
-                     .alias('v'))
-    query = vec.where(F.col('vec_id') == 0) \
-        .select(F.col('v').alias('q'))
-    dot = F.aggregate(F.zip_with('v', 'q', lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    scored = (vec.crossJoin(F.broadcast(query))
-              .select('vec_id',
-                      (dot / (norm('v') * norm('q'))).alias('cos')))
-    return (scored.orderBy(F.desc('cos'), F.asc('vec_id')).limit(10)
-            .select('vec_id', F.round('cos', 4).alias('cos_sim')))
+    """brute-force cosine top-10 against the vec_id=0 query embedding
+    (pipeline/similarity.brute_force_topk)"""
+    from pyxml_spark.pipeline.similarity import (as_double_vec,
+                                                 brute_force_topk)
+    vec = as_double_vec(_table(spark, sf_dir, 'embeddings'))
+    q = vec.where(F.col('vec_id') == 0).select(F.col('v').alias('q'))
+    return brute_force_topk(vec, q, 10).select(
+        'vec_id', F.round('cos_sim', 4).alias('cos_sim'))
 
 
 def q_extract_spans(spark, sf_dir) -> DataFrame:
@@ -875,19 +814,14 @@ def q_simhash16(spark, sf_dir) -> DataFrame:
 
 
 def q_embedding_near_dup(spark, sf_dir) -> DataFrame:
-    """embedding-cosine near-dup candidates: adjacent-id pairs scored with a
-    double dot product, integer-scaled for exact cross-engine compare"""
-    emb = _table(spark, sf_dir, 'embeddings')
-    vec = emb.select('vec_id', F.transform('embedding',
-                                           lambda x: x.cast('double'))
-                     .alias('v'))
+    """embedding-cosine near-dup candidates: adjacent-id pairs scored with
+    the library cosine (pipeline/similarity.cosine)"""
+    from pyxml_spark.pipeline.similarity import as_double_vec, cosine
+    vec = as_double_vec(_table(spark, sf_dir, 'embeddings')) \
+        .select('vec_id', 'v')
     a, b = vec.alias('a'), vec.alias('b')
     pairs = a.join(b, F.col('a.vec_id') + 1 == F.col('b.vec_id'))
-    dot = F.aggregate(F.zip_with('a.v', 'b.v', lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda p, x: p + x))
-    cos = dot / (nrm('a.v') * nrm('b.v'))
+    cos = cosine('a.v', 'b.v')
     return pairs.select(F.col('a.vec_id').alias('id_a'),
                         F.col('b.vec_id').alias('id_b'),
                         F.round(cos, 4).alias('cos_sim'),
@@ -996,26 +930,6 @@ def q_ann_ivf_topk(spark, sf_dir) -> DataFrame:
     vec = as_double_vec(emb).select('vec_id', 'v')
     q = vec.where(F.col('vec_id') == 0).select(F.col('v').alias('q'))
     out = grid_ivf_topk(vec, q, k=10, n_bits=_ANN_IVF_BITS)
-    return out.select('vec_id', F.round('cos_sim', 4).alias('cos_sim'))
-
-
-def q_ann_kmeans_topk(spark, sf_dir) -> DataFrame:
-    """the model-based IVF variant (Spark ML KMeans coarse quantizer,
-    pipeline/similarity.build_ivf/ivf_topk), made driver-visible as a
-    rows-only row: KMeans is iterative and driver-coordinated, so it has
-    no SQL twin (documented since r2) — the oracle-checked production
-    path is q_ann_ivf_topk's grid quantizer. Fixed seed + fixed input
-    layout keep the centers, and therefore the probe set and top-k,
-    deterministic across runs. The per-query center ranking reads
-    model.clusterCenters() driver-side — k-bounded, the same place the
-    KMeans fit already lives."""
-    from pyxml_spark.pipeline.similarity import (as_double_vec, build_ivf,
-                                                 ivf_topk)
-    emb = _table(spark, sf_dir, 'embeddings')
-    vec = as_double_vec(emb).select('vec_id', 'v')
-    q = vec.where(F.col('vec_id') == 0).select(F.col('v').alias('q'))
-    assigned, model = build_ivf(vec, n_lists=16)
-    out = ivf_topk(assigned, model, q, k=10, n_probe=4)
     return out.select('vec_id', F.round('cos_sim', 4).alias('cos_sim'))
 
 
@@ -1502,44 +1416,14 @@ def q_curate_pipeline(spark, sf_dir) -> DataFrame:
 
 def q_benchmark_overlap(spark, sf_dir) -> DataFrame:
     """decontamination: flag documents sharing any exact 8-token n-gram
-    with a benchmark/eval set (GPT-3/Gopher-style n-gram decontamination;
-    the deterministic doc_id % 50 == 0 slice stands in for the eval
-    suite). Scale shape: the benchmark gram set is distinct-small and
-    BROADCASTs into the corpus gram join; the corpus side reduces to
-    distinct (doc, gram-hash) rows — grams travel as 60-bit md5 hashes
-    (deterministic in both engines, collision odds ~n²/2^60), so the
-    distinct/join shuffles move 8-byte keys instead of ~50-char strings.
-    Cost is two hash shuffles, never a corpus x corpus comparison. The
-    token array is staged in a Project (HOF common-subexpression rule),
-    and the gram sequence is guarded with when(n >= K) because Spark's
-    sequence(1, stop) turns descending for stop < 1."""
-    K = 8
+    with a benchmark/eval set (pipeline/curate.decontaminate; the
+    deterministic doc_id % 50 == 0 slice stands in for the eval suite)"""
+    from pyxml_spark.pipeline.curate import decontaminate
     docs = _table(spark, sf_dir, 'documents')
-    ws = docs.where(F.trim('text') != '').select(
-        'doc_id', F.split(F.trim('text'), r'\s+').alias('ws'))
-    n = F.size('ws')
-    grams = F.when(n >= K, F.transform(
-        F.sequence(F.lit(1), n - (K - 1)),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(' ', F.slice('ws', i, K)).cast('binary')),
-            1, 15), 16, 10).cast('long'))) \
-        .otherwise(F.array().cast('array<long>'))
-    staged = ws.select('doc_id', grams.alias('grams'))
-    dg = staged.select('doc_id', F.explode('grams').alias('g')).distinct()
-    # build the benchmark gram set from the benchmark slice only — deriving
-    # it from dg would re-run the full-corpus tokenize+hash+explode a
-    # second time for the broadcast side
-    bench = (staged.where(F.col('doc_id') % 50 == 0)
-             .select(F.explode('grams').alias('g')).distinct())
-    hits = (dg.join(F.broadcast(bench), 'g')
-            .groupBy('doc_id').agg(F.count('*').alias('n')))
-    n_hits = F.coalesce('n', F.lit(0)).cast('long')
-    return (docs.select('doc_id').join(hits, 'doc_id', 'left')
-            .select('doc_id',
-                    n_hits.alias('n_gram_hits'),
-                    (F.col('doc_id') % 50 == 0).alias('is_benchmark'),
-                    ((F.col('doc_id') % 50 != 0) & (n_hits > 0))
-                    .alias('contaminated')))
+    is_bench = F.col('doc_id') % 50 == 0
+    return decontaminate(docs, docs.where(is_bench)).select(
+        'doc_id', 'n_gram_hits', is_bench.alias('is_benchmark'),
+        (~is_bench & F.col('contaminated')).alias('contaminated'))
 
 
 def _drain_stream_utc(spark, build, sink_name: str,
@@ -2016,7 +1900,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'ngram_jaccard_pairs': q_ngram_jaccard_pairs,
         'simhash16': q_simhash16,
         'embedding_near_dup': q_embedding_near_dup,
-        'ann_kmeans_topk': q_ann_kmeans_topk,
         'join_rollup': q_join_rollup,
         'region_revenue': q_region_revenue,
         'part_brand_stats': q_part_brand_stats,

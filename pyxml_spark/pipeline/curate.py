@@ -1,17 +1,15 @@
 """Corpus curation: the gate/score operators a training-data pipeline
 chains in front of packing.
 
-Library faces of the oracle-checked contract queries (definitions mirror
-__spark_entry__ exactly — same thresholds, same plan shapes — so the
-driver contract keeps pinning these semantics while jobs compose them):
+The oracle-checked contract queries in __spark_entry__ call these
+operators, so the driver contract pins the code the jobs compose:
 
 * :func:`score_documents` — quality gate (token/char-shape bounds,
   `quality_score`), language id (stopword + trigram heuristic,
-  `lang_id`), Gopher-style top-bigram repetition (`gopher_repetition`'s
-  linear explode + two-hash-aggregate plan).
+  `lang_id`) and :func:`repetition_x10k`, Gopher-style top-bigram
+  repetition (`gopher_repetition`).
 * :func:`decontaminate` — 8-token-gram overlap against a benchmark/eval
-  corpus (`benchmark_overlap`'s shape: grams travel as 60-bit md5
-  hashes, the benchmark side is distinct-small and broadcasts).
+  corpus (`benchmark_overlap`).
 
 jobs/curate.py chains these with MinHash dedup (pipeline/dedup.py) and
 sequence packing (pipeline/prefix.py) into one spark-submit run.
@@ -29,16 +27,27 @@ QUALITY_MAX_TOKENS = 500
 #: default gate: drop docs whose top bigram takes > 20% of all bigrams
 REP_MAX_X10K = 2000
 
-#: shared with __spark_entry__.q_lang_id (same stopwords / trigrams)
 _EN_STOPWORDS = ('the', 'and', 'of', 'to', 'in')
 _EN_TRIGRAMS = ('the', 'ing', 'ent', 'ion', 'and')
 
 
 def repetition_x10k(df: DataFrame, id_col: str = 'doc_id',
                     text_col: str = 'text') -> DataFrame:
-    """(id, rep_x10k): top-bigram fraction x10000, the linear plan of
-    q_gopher_repetition — staged token array (HOF CSE rule), explode_outer
-    (zero-bigram docs keep a row), two map-side-combined aggregates."""
+    """(doc_id, n_bigrams, top_count, rep_x10k): the fraction of each
+    document's word bigrams taken by its most frequent bigram, x10000.
+
+    Linear plan: the bigram array is staged in a Project, explode_outer'd
+    (so zero-bigram docs keep their row), counted per (doc_id, bigram),
+    then reduced per doc — two hash aggregates with map-side partial
+    combine. A row-local form (array_distinct + a nested filter per
+    distinct bigram) rescans the whole array once per distinct bigram:
+    O(D*N) inside a single row's expression, ~1e10 comparisons on a
+    100k-token document. tests/test_textops.py pins the flat cost on a
+    50k-token doc and asserts array_distinct is absent from the plan."""
+    # stage the split token array in its own Project: element_at inside the
+    # transform lambda would otherwise re-evaluate the split per element
+    # (no common-subexpression elimination across higher-order-function
+    # boundaries) — quadratic bigram *construction* on long documents
     ws = df.select(F.col(id_col).alias('doc_id'),
                    F.split(F.trim(text_col), r'\s+').alias('ws'))
     n = F.size('ws')
@@ -55,20 +64,24 @@ def repetition_x10k(df: DataFrame, id_col: str = 'doc_id',
     cnt = F.when(F.col('bigram').isNull(), F.lit(0)) \
         .otherwise(F.col('cnt'))
     agg = per_doc.groupBy('doc_id').agg(
-        F.sum(F.when(F.col('bigram').isNull(), F.lit(0))
-              .otherwise(F.col('cnt'))).alias('n_bigrams'),
-        F.max(cnt).alias('top_count'))
+        F.sum(cnt).cast('long').alias('n_bigrams'),
+        F.max(cnt).cast('long').alias('top_count'))
     rep = F.when(F.col('n_bigrams') <= 0, F.lit(0)).otherwise(
         F.floor(F.col('top_count') * 10000 / F.col('n_bigrams')))
-    return agg.select('doc_id', rep.cast('long').alias('rep_x10k'))
+    return agg.select('doc_id', 'n_bigrams', 'top_count',
+                      rep.cast('long').alias('rep_x10k'))
 
 
 def score_documents(df: DataFrame, id_col: str = 'doc_id',
                     text_col: str = 'text') -> DataFrame:
-    """input columns + (n_tokens, chars_ns, is_quality, lang, rep_x10k).
+    """input columns + (n_tokens, chars_ns, is_quality, en_hits,
+    tri_hits, lang, rep_x10k).
 
     One projection pass for the shape/lang columns plus the repetition
-    aggregate joined back on the id — no python, no windows."""
+    aggregate joined back on the id — no python, no windows. ``lang`` is
+    'en' when the text holds at least two of the stopwords or three
+    occurrences of the character trigrams (counted by length difference,
+    exact in both Spark and DuckDB)."""
     trimmed = F.trim(F.col(text_col))
     n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
         F.size(F.split(trimmed, r'\s+'))).cast('long')
@@ -87,11 +100,13 @@ def score_documents(df: DataFrame, id_col: str = 'doc_id',
                        & (n_tokens <= QUALITY_MAX_TOKENS)
                        & (chars_ns >= 3 * n_tokens)
                        & (chars_ns <= 12 * n_tokens)),
+        'en_hits': en_hits,
+        'tri_hits': tri,
         'lang': F.when((en_hits >= 2) | (tri >= 3),
                        F.lit('en')).otherwise(F.lit('unk')),
     })
     rep = repetition_x10k(df, id_col, text_col) \
-        .withColumnRenamed('doc_id', id_col)
+        .select(F.col('doc_id').alias(id_col), 'rep_x10k')
     return scored.join(rep, id_col, 'left') \
         .fillna({'rep_x10k': 0})
 
@@ -101,9 +116,15 @@ def decontaminate(df: DataFrame, bench_df: DataFrame,
                   bench_text_col: str = 'text', k: int = 8,
                   broadcast: bool = True) -> DataFrame:
     """(id, n_gram_hits, contaminated): docs sharing any exact k-token
-    gram with the benchmark corpus. Grams are 60-bit md5 hashes; the
-    benchmark gram set broadcasts into the corpus gram join
-    (q_benchmark_overlap's shape — never corpus x corpus).
+    gram with the benchmark corpus (GPT-3/Gopher-style n-gram
+    decontamination). Grams travel as 60-bit md5 hashes (deterministic in
+    Spark and DuckDB, collision odds ~n²/2^60), so the distinct/join
+    shuffles move 8-byte keys instead of ~50-char strings. The benchmark
+    gram set is built from ``bench_df`` alone and broadcasts into the
+    corpus gram join: two hash shuffles, never corpus x corpus. The token
+    array is staged in a Project (HOF common-subexpression rule), and the
+    gram sequence is guarded with when(n >= k) because Spark's
+    sequence(1, stop) turns descending for stop < 1.
 
     SMALL-SIDE CONTRACT (same style as pipeline/temporal.py): ``bench_df``
     must be an eval/benchmark suite — thousands to low millions of

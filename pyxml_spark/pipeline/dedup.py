@@ -328,10 +328,13 @@ def incremental_candidate_pairs(new_bands: DataFrame,
     would merge two non-duplicate components.
 
     Scale shape, in order:
-    (1) the shard's distinct band keys broadcast into the index scan
-        (``broadcast_keys=True``, the daily-shard case; pass False for a
-        bulk backfill and AQE plans the equi-join) so the corpus-sized
-        side is FILTERED AT THE SCAN to only buckets the shard hits;
+    (1) the shard's distinct band keys broadcast into a hash join with
+        the index (``broadcast_keys=True``, the daily-shard case; pass
+        False for a bulk backfill and AQE plans the equi-join), so only
+        buckets the shard hits survive the join. The index is still read
+        in full, and ``hits`` is referenced by both the bucket-size
+        aggregate and the member rows, so the plan scans and joins the
+        index once per reference;
     (2) bucket linking mirrors candidate_pairs' two regimes:
         * small buckets (<= hot_threshold surviving members): the new
           doc links to EVERY existing member — a single-rep link could

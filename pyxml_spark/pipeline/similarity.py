@@ -1,9 +1,12 @@
 """Similarity search over embedding columns.
 
-Two strategies:
+Three strategies, all reranking with the exact :func:`cosine`:
 
 * :func:`brute_force_topk` — exact cosine against a broadcast query vector;
   the correctness baseline (O(N) per query; fine fanned out over queries).
+* :func:`grid_ivf_topk` — IVF probe over a sign-orthant grid quantizer
+  (:func:`grid_assign`): the query's list plus the lists within a small
+  Hamming radius of it.
 * :func:`lsh_topk` — the scale path: random-hyperplane LSH signatures
   (deterministic sign pattern per (table, plane, dim), no RNG state)
   bucket the corpus; a query probes its own bucket plus all
@@ -22,8 +25,8 @@ corpora; tests/test_similarity.py asserts the probed candidate fraction
 stays under a few percent AND that planted near-dups are still found at
 these defaults.
 
-Both return (vec_id, cos_sim) DataFrames. Recall of the LSH path vs brute
-force is asserted in tests/test_similarity.py.
+Each returns (vec_id, cos_sim) DataFrames. Recall of the LSH and grid
+paths vs brute force is asserted in tests/test_similarity.py.
 """
 from __future__ import annotations
 
@@ -32,8 +35,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = ['as_double_vec', 'brute_force_topk', 'add_lsh_signature',
-           'build_lsh_index', 'lsh_topk', 'lsh_topk_batch', 'build_ivf',
-           'ivf_topk', 'grid_assign', 'grid_ivf_topk']
+           'build_lsh_index', 'lsh_topk', 'lsh_topk_batch', 'cosine',
+           'grid_assign', 'grid_ivf_topk']
 
 
 def as_double_vec(df: DataFrame, col: str = 'embedding',
@@ -51,7 +54,9 @@ def _norm(c):
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def _cosine(a, b):
+def cosine(a, b):
+    """cosine of two array<double> columns: dot(a, b) / (|a| |b|), each
+    sum a left-to-right double fold"""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
@@ -59,7 +64,7 @@ def brute_force_topk(vec_df: DataFrame, query_df: DataFrame,
                      k: int = 10) -> DataFrame:
     """exact cosine top-k; query_df has one row with column ``q``"""
     scored = (vec_df.crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('vec_id', cosine('v', 'q').alias('cos_sim')))
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
 
 
@@ -163,7 +168,7 @@ def lsh_topk_batch(vec_df: DataFrame, queries_df: DataFrame, k: int = 10,
     cands = cand.distinct()
     scored = (cands.join(vec_df.select('vec_id', 'v'), 'vec_id')
               .join(queries_df, 'qid')
-              .select('qid', 'vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('qid', 'vec_id', cosine('v', 'q').alias('cos_sim')))
     w = Window.partitionBy('qid').orderBy(F.desc('cos_sim'),
                                           F.asc('vec_id'))
     return (scored.withColumn('rnk',
@@ -171,48 +176,13 @@ def lsh_topk_batch(vec_df: DataFrame, queries_df: DataFrame, k: int = 10,
             .where(F.col('rnk') <= k))
 
 
-def build_ivf(vec_df: DataFrame, n_lists: int = 16, seed: int = 42):
-    """IVF index: KMeans coarse quantizer (Spark ML) + cluster assignment.
-
-    Returns (assigned DataFrame with a ``list_id`` column, fitted model).
-    At scale the assignment is a narrow map stage and the per-query probe
-    touches only ``n_probe/n_lists`` of the corpus.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = vec_df.withColumn('features', array_to_vector('v'))
-    model = KMeans(k=n_lists, seed=seed, featuresCol='features',
-                   predictionCol='list_id').fit(feats)
-    assigned = model.transform(feats).drop('features')
-    return assigned, model
-
-
-def ivf_topk(assigned: DataFrame, model, query_df: DataFrame, k: int = 10,
-             n_probe: int = 4) -> DataFrame:
-    """probe the n_probe nearest inverted lists, exact rerank within them"""
-    import numpy as np
-
-    q = query_df.first()['q']
-    centers = model.clusterCenters()
-    qv = np.asarray(q, dtype='float64')
-    dists = [float(np.linalg.norm(qv - np.asarray(c, dtype='float64')))
-             for c in centers]
-    probe = sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
-    cands = assigned.where(F.col('list_id').isin(probe))
-    scored = (cands.crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
-    return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
-
-
 def grid_assign(vec_df: DataFrame, n_bits: int = 8, col: str = 'v',
                 out: str = 'list_id') -> DataFrame:
     """deterministic IVF coarse quantizer: inverted list = orthant of the
     first ``n_bits`` dimensions (bit d set when v[d] >= 0).
 
-    A KMeans-free quantizer with an exact DuckDB twin (the KMeans variant in
-    :func:`build_ivf` stays available but has no SQL oracle); assignment is
-    a narrow JVM-side map, no fitted model to ship.
+    A fixed quantizer with an exact DuckDB twin; assignment is a narrow
+    JVM-side map, no fitted model to ship.
     """
     lid = F.lit(0)
     for d in range(n_bits):
@@ -239,7 +209,7 @@ def grid_ivf_topk(vec_df: DataFrame, query_df: DataFrame, k: int = 10,
     query = query.withColumn('probe', F.explode(F.array(*probes)))
     cands = corpus.join(F.broadcast(query),
                         corpus['list_id'] == query['probe'], 'inner')
-    scored = cands.select('vec_id', _cosine('v', 'q').alias('cos_sim')) \
+    scored = cands.select('vec_id', cosine('v', 'q').alias('cos_sim')) \
         .dropDuplicates(['vec_id'])
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
 
@@ -324,5 +294,5 @@ def lsh_topk(vec_df: DataFrame, query_df: DataFrame, k: int = 10,
     cand_ids = cand.distinct()
     scored = (vec_df.select('vec_id', 'v').join(cand_ids, 'vec_id')
               .crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('vec_id', cosine('v', 'q').alias('cos_sim')))
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)

@@ -40,8 +40,7 @@ def extract_stream(stream: DataFrame,
                    config: ExtractConfig = ExtractConfig()) -> DataFrame:
     """streaming extraction: same kernel, no repartition (stream partitions
     follow the source; salting is a batch concern)"""
-    cols = stream.select('conv_id', 'turn_idx', 'text', 'ts')
-    return cols.select('conv_id', 'turn_idx', 'text').mapInArrow(
+    return stream.select('conv_id', 'turn_idx', 'text').mapInArrow(
         lambda it: extract_arrow_batches(it, config), schema=EXTRACTION_SCHEMA)
 
 

@@ -81,7 +81,8 @@ def main():
             continue
         sql = oracles.get(name)
         if sql is None:
-            print(f'rows-only {name}: {len(srows)} rows')
+            print(f'FAIL {name}: no oracle')
+            failures += 1
             continue
         try:
             rel = con.sql(sql)

@@ -27,6 +27,21 @@ def has_reference() -> bool:
 requires_reference = pytest.mark.skipif(
     not has_reference(), reason='reference pyxml not importable')
 
+
+def run_job(job: str, args) -> dict:
+    """run ``pyxml_spark/jobs/<job>.py`` in its own interpreter and return
+    the metrics JSON of its last stdout line. A job's ``main`` stops its
+    SparkSession, which in-process would also stop any module fixture's
+    shared SparkContext."""
+    import json
+    import subprocess
+    path = os.path.join(REPO, 'pyxml_spark', 'jobs', f'{job}.py')
+    proc = subprocess.run([sys.executable, path, *args],
+                          capture_output=True, text=True)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
 # exception-name equivalence between our engine and the reference
 ERROR_NAME_MAP = {
     'ComposeError': 'BuilderError',

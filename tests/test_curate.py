@@ -3,6 +3,8 @@ import json
 
 import pytest
 
+from tests.conftest import run_job
+
 pyspark = pytest.importorskip('pyspark')
 
 
@@ -66,19 +68,12 @@ def test_decontaminate_planted_overlap(spark):
 def test_curate_job_end_to_end(tmp_path):
     """job smoke at sf0.001: metrics add up, output passes every gate,
     resume skips all stages, benchmark decontamination removes docs"""
-    from pyxml_spark.jobs.curate import main
-    import io
-    from contextlib import redirect_stdout
-
     out = str(tmp_path / 'curated')
 
     def run(extra):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            assert main(['--input',
-                         '/root/testdata/sf0.001/documents.parquet',
-                         '--output', out, '--cpus', '4'] + extra) == 0
-        return json.loads(buf.getvalue().strip().splitlines()[-1])
+        return run_job('curate', ['--input',
+                                  '/root/testdata/sf0.001/documents.parquet',
+                                  '--output', out, '--cpus', '4'] + extra)
 
     m = run([])
     assert m['n_input'] == 500
@@ -111,19 +106,12 @@ def test_curate_job_mixture_stage(tmp_path):
     sources vanish, and resume re-runs only the mixed stage."""
     import hashlib
     import pyarrow.parquet as pq
-    from pyxml_spark.jobs.curate import main
-    import io
-    from contextlib import redirect_stdout
-
     out = str(tmp_path / 'curated')
 
     def run(extra):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            assert main(['--input',
-                         '/root/testdata/sf0.001/documents.parquet',
-                         '--output', out, '--cpus', '4'] + extra) == 0
-        return json.loads(buf.getvalue().strip().splitlines()[-1])
+        return run_job('curate', ['--input',
+                                  '/root/testdata/sf0.001/documents.parquet',
+                                  '--output', out, '--cpus', '4'] + extra)
 
     m = run([])
     weights = {'src0': 0.0, 'src1': 2.5}

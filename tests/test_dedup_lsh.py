@@ -9,6 +9,8 @@ direct pair.
 """
 import pytest
 
+from tests.conftest import run_job
+
 pyspark = pytest.importorskip('pyspark')
 
 SF_DIR = '/root/testdata/sf0.001'
@@ -385,30 +387,15 @@ def test_incremental_pairs_hot_bucket_caps_fanout(spark):
 def test_dedup_job_resume_manifest_invalidates_on_param_change(tmp_path):
     """ADVICE r3: --resume only honors a stage's _SUCCESS when its params
     manifest matches the current invocation — changing --dup-threshold-x10k
-    must re-run pairs+keepers but reuse toks+bands.
-
-    KEEP THIS TEST LAST IN THE MODULE: jobs.dedup.main stops its own
-    SparkSession, which kills the module fixture's shared SparkContext —
-    any fixture-using test placed after it fails with a dead-JVM
-    AttributeError (hit once when a test was appended at EOF)."""
-    import json
-    from pyxml_spark.jobs.dedup import main
+    must re-run pairs+keepers but reuse toks+bands."""
     out = str(tmp_path / 'dedup_out')
     base = ['--input', '/root/testdata/sf0.001/documents.parquet',
             '--output', out, '--cpus', '4']
-    assert main(base) == 0
+    run_job('dedup', base)
     # identical resume: nothing re-runs
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assert main(base + ['--resume']) == 0
-    rerun = json.loads(buf.getvalue().strip().splitlines()[-1])
+    rerun = run_job('dedup', base + ['--resume'])
     assert rerun['stages_run'] == []
     # changed threshold: toks/bands reused, pairs/keepers recomputed
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assert main(base + ['--resume', '--dup-threshold-x10k',
-                            '9000']) == 0
-    changed = json.loads(buf.getvalue().strip().splitlines()[-1])
+    changed = run_job('dedup', base + ['--resume', '--dup-threshold-x10k',
+                                       '9000'])
     assert changed['stages_run'] == ['pairs', 'keepers']

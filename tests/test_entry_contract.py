@@ -9,22 +9,11 @@ import __spark_entry__ as entry  # noqa: E402
 
 
 def test_queries_have_oracles():
+    """every contract query carries a DuckDB oracle, and every oracle
+    belongs to a query"""
     qs = entry.queries()
-    oracles = entry.oracle_sql()
     assert qs, 'queries() must not be empty'
-    missing = set(oracles) - set(qs)
-    assert not missing, f'oracles without queries: {missing}'
-    # round 2: every query carries an oracle (the ANN paths gained SQL
-    # twins — hyperplane literals / grid quantizer).  Round 4 adds exactly
-    # one deliberate exception: ann_kmeans_topk is an iterative Lloyd's
-    # refinement (driver-side loop over centroid updates) that SQL cannot
-    # express; the driver records its weaker rows-only check, and the
-    # oracle-checked grid/LSH variants remain the production ANN paths.
-    rows_only_allowed = {'ann_kmeans_topk'}
-    rows_only = set(qs) - set(oracles)
-    assert rows_only <= rows_only_allowed, \
-        f'rows-only queries (every operator must carry an oracle): ' \
-        f'{rows_only - rows_only_allowed}'
+    assert set(qs) == set(entry.oracle_sql())
 
 
 def test_callables():

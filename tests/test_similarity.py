@@ -95,28 +95,8 @@ def test_lsh_topk_no_corpus_fanout(spark, vectors):
     assert plan.count('LeftSemi') >= 4, 'per-table semi-joins expected'
 
 
-def test_ivf_recall_vs_brute_force(spark, vectors):
-    from pyspark.sql import functions as F
-    from pyxml_spark.pipeline.similarity import (brute_force_topk, build_ivf,
-                                                 ivf_topk)
-    assigned, model = build_ivf(vectors, n_lists=8, seed=42)
-    assigned = assigned.cache()
-    hits = total = 0
-    for qid in (0, 7, 42):
-        q = vectors.where(F.col('vec_id') == qid).select(
-            F.col('v').alias('q'))
-        exact = {r.vec_id for r in brute_force_topk(vectors, q, 10).collect()}
-        approx = {r.vec_id for r in
-                  ivf_topk(assigned, model, q, 10, n_probe=3).collect()}
-        assert qid in approx
-        hits += len(exact & approx)
-        total += len(exact)
-    # probing 3/8 lists; random gaussians are the worst case for IVF too
-    assert hits / total >= 0.3, hits / total
-
-
 def test_grid_ivf_recall_vs_brute_force(spark, vectors):
-    """deterministic sign-bit grid quantizer (the SQL-oracled IVF variant)"""
+    """deterministic sign-bit grid quantizer (the SQL-oracled IVF)"""
     from pyspark.sql import functions as F
     from pyxml_spark.pipeline.similarity import (brute_force_topk,
                                                  grid_assign, grid_ivf_topk)
